@@ -1,10 +1,11 @@
 package graft
 
-import graft.functions.CosineSimilarity
+import graft.functions._
 import graft.parse.JsonFindNumbers
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** Session extensions mounting the engine's custom Catalyst pieces.
   * Enable with .config("spark.sql.extensions", "graft.GraftExtensions").
@@ -25,124 +26,59 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    def fn(name: String, cls: Class[_], signature: String, n: Int)(
+        build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        checked(name, signature, n)(build)))
     // Whole-operator extension: the native as-of join (logical node →
     // strategy → streaming merge exec). See graft.plans.AsOfJoin.
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier(JsonFindNumbers.fnName),
-      new ExpressionInfo(classOf[JsonFindNumbers].getName, JsonFindNumbers.fnName),
-      checked(JsonFindNumbers.fnName, "json, key, subfield", 3)(
-        exprs => JsonFindNumbers(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(CosineSimilarity.fnName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, CosineSimilarity.fnName),
-      checked(CosineSimilarity.fnName, "vecA, vecB", 2)(
-        exprs => CosineSimilarity(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.LshSignature.fnName),
-      new ExpressionInfo(classOf[graft.functions.LshSignature].getName, graft.functions.LshSignature.fnName),
-      checked(graft.functions.LshSignature.fnName, "vec, numPlanes, table", 3)(
-        exprs => graft.functions.LshSignature(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.SimHash64.fnName),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, graft.functions.SimHash64.fnName),
-      checked(graft.functions.SimHash64.fnName, "words", 1)(
-        exprs => graft.functions.SimHash64(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.SimHashMd5.fnName),
-      new ExpressionInfo(classOf[graft.functions.SimHashMd5].getName, graft.functions.SimHashMd5.fnName),
-      checked(graft.functions.SimHashMd5.fnName, "words", 1)(
-        exprs => graft.functions.SimHashMd5(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.WordShingles.fnName),
-      new ExpressionInfo(classOf[graft.functions.WordShingles].getName, graft.functions.WordShingles.fnName),
-      checked(graft.functions.WordShingles.fnName, "text, n", 2)(
-        exprs => graft.functions.WordShingles(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.TopKCount.fnName),
-      new ExpressionInfo(classOf[graft.functions.TopKCount].getName, graft.functions.TopKCount.fnName),
-      checked(graft.functions.TopKCount.fnName, "term, k, capacity", 3)(
-        exprs => graft.functions.TopKCount(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.TopKSum.fnName),
-      new ExpressionInfo(classOf[graft.functions.TopKSum].getName, graft.functions.TopKSum.fnName),
-      checked(graft.functions.TopKSum.fnName, "term, weight, k, capacity", 4)(
-        exprs => graft.functions.TopKSum(exprs(0), exprs(1), exprs(2), exprs(3)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.NfcNormalize.fnName),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName, graft.functions.NfcNormalize.fnName),
-      checked(graft.functions.NfcNormalize.fnName, "str", 1)(
-        exprs => graft.functions.NfcNormalize(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.SubwordTokenize.fnName),
-      new ExpressionInfo(classOf[graft.functions.SubwordTokenize].getName, graft.functions.SubwordTokenize.fnName),
-      checked(graft.functions.SubwordTokenize.fnName, "words, vocab, unk", 3)(
-        exprs => graft.functions.SubwordTokenize(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.DictMatch.fnName),
-      new ExpressionInfo(classOf[graft.functions.DictMatch].getName, graft.functions.DictMatch.fnName),
-      checked(graft.functions.DictMatch.fnName, "text, patterns", 2)(
-        exprs => graft.functions.DictMatch(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.aggName),
-      new ExpressionInfo(classOf[graft.functions.BitmapAgg].getName, graft.functions.BitmapDistinct.aggName),
-      checked(graft.functions.BitmapDistinct.aggName, "bucket, m", 2)(
-        exprs => graft.functions.BitmapAgg(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.orAggName),
-      new ExpressionInfo(classOf[graft.functions.BitmapOrAgg].getName, graft.functions.BitmapDistinct.orAggName),
-      checked(graft.functions.BitmapDistinct.orAggName, "bm", 1)(
-        exprs => graft.functions.BitmapOrAgg(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.cardName),
-      new ExpressionInfo(classOf[graft.functions.BitmapCardinality].getName, graft.functions.BitmapDistinct.cardName),
-      checked(graft.functions.BitmapDistinct.cardName, "bm", 1)(
-        exprs => graft.functions.BitmapCardinality(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.andName),
-      new ExpressionInfo(classOf[graft.functions.BitmapAndCardinality].getName, graft.functions.BitmapDistinct.andName),
-      checked(graft.functions.BitmapDistinct.andName, "a, b", 2)(
-        exprs => graft.functions.BitmapAndCardinality(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.BitmapDistinct.orName),
-      new ExpressionInfo(classOf[graft.functions.BitmapOrCardinality].getName, graft.functions.BitmapDistinct.orName),
-      checked(graft.functions.BitmapDistinct.orName, "a, b", 2)(
-        exprs => graft.functions.BitmapOrCardinality(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.CountMin.aggName),
-      new ExpressionInfo(classOf[graft.functions.CountMinAgg].getName, graft.functions.CountMin.aggName),
-      checked(graft.functions.CountMin.aggName, "value, w, d", 3)(
-        exprs => graft.functions.CountMinAgg(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.CountMin.mergeName),
-      new ExpressionInfo(classOf[graft.functions.CountMinMergeAgg].getName, graft.functions.CountMin.mergeName),
-      checked(graft.functions.CountMin.mergeName, "sketch", 1)(
-        exprs => graft.functions.CountMinMergeAgg(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.CountMin.estName),
-      new ExpressionInfo(classOf[graft.functions.CountMinEstimate].getName, graft.functions.CountMin.estName),
-      checked(graft.functions.CountMin.estName, "sketch, value", 2)(
-        exprs => graft.functions.CountMinEstimate(exprs(0), exprs(1)))))
+    fn(JsonFindNumbers.fnName, classOf[JsonFindNumbers], "json, key, subfield", 3)(
+      exprs => JsonFindNumbers(exprs(0), exprs(1), exprs(2)))
+    fn(CosineSimilarity.fnName, classOf[CosineSimilarity], "vecA, vecB", 2)(
+      exprs => CosineSimilarity(exprs(0), exprs(1)))
+    fn(LshSignature.fnName, classOf[LshSignature], "vec, numPlanes, table", 3)(
+      exprs => LshSignature(exprs(0), exprs(1), exprs(2)))
+    fn(SimHash64.fnName, classOf[SimHash64], "words", 1)(
+      exprs => SimHash64(exprs(0)))
+    fn(SimHashMd5.fnName, classOf[SimHashMd5], "words", 1)(
+      exprs => SimHashMd5(exprs(0)))
+    fn(WordShingles.fnName, classOf[WordShingles], "text, n", 2)(
+      exprs => WordShingles(exprs(0), exprs(1)))
+    fn(TopKCount.fnName, classOf[TopKCount], "term, k, capacity", 3)(
+      exprs => TopKCount(exprs(0), exprs(1), exprs(2)))
+    fn(TopKSum.fnName, classOf[TopKSum], "term, weight, k, capacity", 4)(
+      exprs => TopKSum(exprs(0), exprs(1), exprs(2), exprs(3)))
+    fn(NfcNormalize.fnName, classOf[NfcNormalize], "str", 1)(
+      exprs => NfcNormalize(exprs(0)))
+    fn(SubwordTokenize.fnName, classOf[SubwordTokenize], "words, vocab, unk", 3)(
+      exprs => SubwordTokenize(exprs(0), exprs(1), exprs(2)))
+    fn(DictMatch.fnName, classOf[DictMatch], "text, patterns", 2)(
+      exprs => DictMatch(exprs(0), exprs(1)))
+    fn(BitmapDistinct.aggName, classOf[BitmapAgg], "bucket, m", 2)(
+      exprs => BitmapAgg(exprs(0), exprs(1)))
+    fn(BitmapDistinct.orAggName, classOf[BitmapOrAgg], "bm", 1)(
+      exprs => BitmapOrAgg(exprs(0)))
+    fn(BitmapDistinct.cardName, classOf[BitmapCardinality], "bm", 1)(
+      exprs => BitmapCardinality(exprs(0)))
+    fn(BitmapDistinct.andName, classOf[BitmapAndCardinality], "a, b", 2)(
+      exprs => BitmapAndCardinality(exprs(0), exprs(1)))
+    fn(BitmapDistinct.orName, classOf[BitmapOrCardinality], "a, b", 2)(
+      exprs => BitmapOrCardinality(exprs(0), exprs(1)))
+    fn(CountMin.aggName, classOf[CountMinAgg], "value, w, d", 3)(
+      exprs => CountMinAgg(exprs(0), exprs(1), exprs(2)))
+    fn(CountMin.mergeName, classOf[CountMinMergeAgg], "sketch", 1)(
+      exprs => CountMinMergeAgg(exprs(0)))
+    fn(CountMin.estName, classOf[CountMinEstimate], "sketch, value", 2)(
+      exprs => CountMinEstimate(exprs(0), exprs(1)))
     // Spark's own runtime-filter expressions, surfaced as callable
     // functions so ops/Joins.bloomPrunedJoin can build/probe the
     // sketch explicitly (the planner's InjectRuntimeFilter only fires
     // under narrow preconditions). Both are codegen'd; the aggregate
     // merges partial sketches executor-side.
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      checked("graft_bloom_agg", "xxhash64Value, estimatedItems, numBits", 3)(
-        exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      checked("graft_might_contain", "bloomFilter, xxhash64Value", 2)(
-        exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1)))))
+    fn("graft_bloom_agg", classOf[BloomFilterAggregate], "xxhash64Value, estimatedItems, numBits", 3)(
+      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)))
+    fn("graft_might_contain", classOf[BloomFilterMightContain], "bloomFilter, xxhash64Value", 2)(
+      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
   }
 }

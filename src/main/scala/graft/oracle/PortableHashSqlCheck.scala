@@ -1,16 +1,15 @@
 package graft.oracle
 
 /** Dev tool: writes a self-checking DuckDB script for the generated
-  * portable-hash SQL to the given path (default /tmp/phc.sql), `;;`
-  * separated. Each statement returns `<label>, n_mismatch` — a
-  * correct emitter yields all zeros. Drive with:
-  *   sbt "runMain graft.oracle.PortableHashSqlCheck"
+  * portable-hash SQL to `outPath` (`Dev hashsql` defaults it to
+  * /tmp/phc.sql), `;;` separated. Each statement returns `<label>,
+  * n_mismatch` — a correct emitter yields all zeros. Drive with:
+  *   sbt "runMain graft.Dev hashsql"
   *   python3 -c "import duckdb; [print(duckdb.sql(p).fetchall()) for p in open('/tmp/phc.sql').read().split(';;')]"
   * (dev/compare.py is the production path; this isolates the emitters.)
   */
 object PortableHashSqlCheck {
-  def main(args: Array[String]): Unit = {
-    val outPath = args.headOption.getOrElse("/tmp/phc.sql")
+  def write(outPath: String): Unit = {
     val words: Seq[String] =
       (0 to 40).map(n => "abcdefghij" * 5 take n).filter(_.nonEmpty).distinct ++
         Seq("héllo wörld", "ñ", "日本語テキスト", "x" * 31, "y" * 32, "z" * 33,

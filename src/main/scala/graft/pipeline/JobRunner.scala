@@ -27,15 +27,7 @@ object JobRunner {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: JobRunner <job> <sfDir> <outDir>")
     val Array(job, sfDir, outDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.tables.TestTables.nanosAsLongConf._1, graft.tables.TestTables.nanosAsLongConf._2) // NANOS events support; readers never mutate conf
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     // Optional 4th arg (or GRAFT_CHECKPOINT_DIR): a durable checkpoint
     // directory. When given, every pipeline stage boundary
     // materializes via Materialize.reliable instead of localCheckpoint
@@ -92,9 +84,6 @@ object JobRunner {
       }
     case other => throw new IllegalArgumentException(s"unknown job: $other")
   }
-
-  /** Epoch nanoseconds of a timestamp (floor to its µs precision). */
-  def tsNanos(t: java.sql.Timestamp): Long = TestTables.tsNanos(t)
 
   /** Hash-bucket count for the `current` table's partition layout. */
   val upsertBuckets = 16

@@ -6,17 +6,16 @@ import org.apache.spark.sql.SparkSession
   * time otherwise.
   */
 object SharedSpark {
+  /** The test role's settings on top of [[Session]]'s: a fixed 4-core
+    * layout whatever the box, and a per-JVM warehouse.
+    */
+  val conf: Map[String, String] = Map(
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" -> s"/tmp/graft_test_warehouse_${ProcessHandle.current().pid()}")
+
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.tables.TestTables.nanosAsLongConf._1, graft.tables.TestTables.nanosAsLongConf._2) // NANOS events support; readers never mutate conf
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft_test_warehouse_${ProcessHandle.current().pid()}")
-      .getOrCreate()
+    val s = Session(conf)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
